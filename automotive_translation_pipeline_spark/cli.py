@@ -43,18 +43,13 @@ Usage:
 
 
 def _todo_from_csv(spark: SparkSession, input_csv: str) -> DataFrame:
-    """Scan + R-7 filter/trim, shaped for the pipeline core. One shard:
-    a single input file packs sequentially like the reference; the
-    folder path shards per file."""
+    """Scan + the pipeline's R-7 todo shaping. One shard: a single input
+    file packs sequentially (in id order) like the reference; the folder
+    path shards per file."""
+    from .plans.pipeline import _shard_todo
     from .sources import read_descriptions_csv
 
-    docs = read_descriptions_csv(spark, input_csv)
-    return (
-        docs.filter(F.length(F.trim("english_sentence")) > 0)
-        .withColumn("english_sentence", F.trim("english_sentence"))
-        .withColumn("shard", F.lit("batch"))
-        .withColumn("seq", F.col("description_id").cast("long"))
-    )
+    return _shard_todo(read_descriptions_csv(spark, input_csv), F.lit("batch"))
 
 
 def cmd_translate(
@@ -103,24 +98,19 @@ def cmd_analyze(
 ) -> None:
     """§3.2 error analysis: parse-outcome taxonomy + repaired store."""
     from .functions.parsing import parse_translations
-    from .functions.predicates import is_truncated
-    from .functions.repair import repair_json_udf
+    from .functions.repair import gated_repair
     from .operators.aggregates import error_rollup
     from .sources.readers import read_response_jsonl
 
     print(f"Analyzing {responses_jsonl}")
     raw = read_response_jsonl(spark, responses_jsonl)
     parsed_n = F.size(parse_translations(F.col("content")))
-    repaired_content = F.when(
-        is_truncated(F.col("content")),
-        repair_json_udf(F.col("content")),
-    )
-    repaired_n = F.size(
-        parse_translations(F.coalesce(repaired_content, F.col("content")))
-    )
+    # The content every later parse reads. In the "repaired" bucket it is
+    # the UDF's output: the gate's fallback parses like the raw content.
+    repaired_content = gated_repair(F.col("content"))
+    repaired_n = F.size(parse_translations(repaired_content))
     classified = raw.select(
         "custom_id",
-        "content",
         repaired_content.alias("repaired_content"),
         # Reference bucket order (auto_translate.py:1165-1181): wire
         # errors first, then empties, then parse outcomes.
@@ -174,11 +164,9 @@ def cmd_analyze(
         parsed_ids = classified.filter(
             F.col("error_type").isin("parsed_ok", "repaired")
         ).select(
-            F.explode(
-                parse_translations(
-                    F.coalesce(F.col("repaired_content"), F.col("content"))
-                )
-            ).alias("description_id", "translation")
+            F.explode(parse_translations(F.col("repaired_content"))).alias(
+                "description_id", "translation"
+            )
         )
         n_missing = docs.join(
             parsed_ids.select("description_id").distinct(),
@@ -206,8 +194,7 @@ def cmd_analyze_batch(
     R-29 order check — from the request JSONL that created the batch
     plus the response JSONL."""
     from .functions.parsing import parse_translations
-    from .functions.predicates import is_truncated
-    from .functions.repair import repair_json_udf
+    from .functions.repair import gated_repair
     from .operators.joins import detect_extras
     from .operators.windows import sequence_check
     from .sources.readers import read_request_jsonl, read_response_jsonl
@@ -231,14 +218,10 @@ def cmd_analyze_batch(
     if resp.isEmpty():
         print(f"[ERROR] {custom_id} not found in {responses_jsonl}")
         return 1
-    effective = F.coalesce(
-        F.when(is_truncated(F.col("content")), repair_json_udf(F.col("content"))),
-        F.col("content"),
-    )
     parsed = resp.select(
         "custom_id",
         F.length("content").alias("content_chars"),
-        F.posexplode(parse_translations(effective)).alias(
+        F.posexplode(parse_translations(gated_repair(F.col("content")))).alias(
             "pos", "description_id", "translation"
         ),
     ).persist()
@@ -289,7 +272,7 @@ def cmd_batch(
     spark: SparkSession, input_dir: str, language: str, output_dir: str
 ) -> None:
     """§3.3 folder orchestrator: one job, per-stem outputs + summary."""
-    from .plans.folder import folder_pipeline
+    from .plans.folder import folder_pipeline, per_file_summary
 
     print(f"Processing folder {input_dir} -> {language} -> {output_dir}")
     print("(offline run: deterministic mock translator)")
@@ -309,27 +292,14 @@ def cmd_batch(
         "source_stem"
     ).csv(output_dir)
 
-    total = F.count("*")
-    failed = F.count(F.when(F.col("is_failed"), 1))
-    summary = (
-        rows.groupBy("source_stem")
-        .agg(
-            total.alias("total_rows"),
-            (total - failed).alias("successful"),
-            failed.alias("failed"),
-            F.round((total - failed) * 100.0 / total, 2).alias("success_pct"),
-            F.countDistinct("batch_id").alias("n_batches"),
-        )
-        .orderBy("source_stem")
-        .collect()
-    )
+    summary = per_file_summary(rows).orderBy("source_stem").collect()
     print(f"\n{'file':<24} {'rows':>6} {'ok':>6} {'failed':>6} "
           f"{'ok%':>7} {'batches':>8}")
     for r in summary:
         print(
             f"{r['source_stem']:<24} {r['total_rows']:>6} "
             f"{r['successful']:>6} {r['failed']:>6} "
-            f"{r['success_pct']:>7} {r['n_batches']:>8}"
+            f"{r['success_rate_pct']:>7} {r['n_batches']:>8}"
         )
     n_files = len(summary)
     n_failed_rows = sum(r["failed"] for r in summary)

@@ -7,7 +7,7 @@ from .cleaning import (  # noqa: F401
 )
 from .parsing import fallback_line_parse, parse_translations  # noqa: F401
 from .predicates import is_suspicious, is_truncated  # noqa: F401
-from .repair import repair_json_udf  # noqa: F401
+from .repair import gated_repair, repair_json_udf  # noqa: F401
 from .text import (  # noqa: F401
     doc_fingerprint,
     lang_id,

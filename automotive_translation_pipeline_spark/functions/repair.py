@@ -18,8 +18,11 @@ import json
 import re
 
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .predicates import is_truncated
 
 
 def _balance_braces(json_str: str) -> str | None:
@@ -79,10 +82,17 @@ def repair_content(content: str | None) -> str | None:
 
 @F.pandas_udf(T.StringType())
 def repair_json_udf(content: pd.Series) -> pd.Series:
-    """F-12/F-13 entry point: repaired content string, or None.
-
-    Callers compose it as
-    ``coalesce(parse_translations(repair_json_udf(c)), parse_translations(c))``
-    mirroring the reference's repair-first-then-fallback orchestration.
-    """
+    """F-12 UDF: repaired content string, or None. Callers use it through
+    :func:`gated_repair`, never directly."""
     return content.map(repair_content)
+
+
+def gated_repair(c: Column) -> Column:
+    """F-13: the content to parse — the repaired blob where ``c`` is
+    truncated and repair succeeds, ``c`` itself everywhere else.
+
+    ``repair_content`` only acts on blobs ``is_truncated`` covers, so the
+    native gate preserves semantics exactly while keeping the Python UDF
+    off the healthy rows: at scale its Arrow stage sees only the (rare)
+    damaged batches."""
+    return F.when(is_truncated(c), F.coalesce(repair_json_udf(c), c)).otherwise(c)

@@ -13,20 +13,13 @@ executor/task slots, not hand-rolled thread pools.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.parsing import parse_translations
-from ..functions.predicates import is_suspicious, is_truncated
-from ..functions.repair import repair_json_udf
-from ..operators.joins import rejoin_results
-from ..operators.packing import (
-    assign_batches_cumsum,
-    materialize_requests,
-    with_cost,
-)
+from ..operators.packing import materialize_requests
 from ..sources import read_descriptions_dir
 from ..translate import translate_requests
+from .pipeline import _pack, _parse_responses, _rejoin_and_flag, _shard_todo
 
 
 def folder_pipeline(
@@ -37,70 +30,33 @@ def folder_pipeline(
     """Run the full translation pipeline over every CSV in a folder in
     ONE Spark job; returns row-level results with file lineage.
 
+    The flagship's own parts, sharded by file stem (F-16): batches never
+    span files (v1 contract: {stem}-batch-NNNN,
+    old_functionalities/jsonl_convertor.py:76-79), and the R-26/R-27
+    shift check runs per file batch like the reference's per-file run.
+
     ``translate_fn`` is the X-5 seam: production/mock is
     ``translate_requests``; fault-path testing injects
     ``translate.translate_requests_with_faults`` (X-7 taxonomy) —
     batches that time out / error / lose their download produce no
     content, so their rows surface as ``is_failed`` sentinel rows
     exactly like the reference's failed-subprocess files."""
-    docs = read_descriptions_dir(spark, input_dir)
-    # R-7 + stem extraction (F-16) for the per-file shard key.
-    docs = (
-        docs.filter(F.length(F.trim("english_sentence")) > 0)
-        .withColumn("english_sentence", F.trim("english_sentence"))
-        .withColumn(
-            "source_stem",
-            F.regexp_extract(F.col("source_file"), r"([^/]+?)(?:\.[^./]+)?$", 1),
-        )
-        .withColumn(
-            "seq",
-            F.row_number().over(
-                Window.partitionBy("source_stem").orderBy("description_id")
-            ),
-        )
+    docs = read_descriptions_dir(spark, input_dir).withColumn(
+        "source_stem",
+        F.regexp_extract(F.col("source_file"), r"([^/]+?)(?:\.[^./]+)?$", 1),
     )
-    costed = with_cost(docs, "english_sentence")
-    # Batches never span files (v1 contract: {stem}-batch-NNNN,
-    # old_functionalities/jsonl_convertor.py:76-79).
-    assigned = assign_batches_cumsum(
-        costed, order_col="seq", limit=4000, shard_col="source_stem"
-    )
-    requests = materialize_requests(assigned)
-    responses = translate_fn(requests)
-    repaired = responses.select(
-        F.col("custom_id").alias("batch_id"),
-        F.when(
-            is_truncated(F.col("content")),
-            F.coalesce(repair_json_udf(F.col("content")), F.col("content")),
-        )
-        .otherwise(F.col("content"))
-        .alias("repaired_content"),
-    )
-    parsed = repaired.select(
-        "batch_id",
-        F.explode(parse_translations(F.col("repaired_content"))).alias(
-            "description_id", "translation"
-        ),
-    )
+    assigned = _pack(_shard_todo(docs, F.col("source_stem")), limit=4000)
+    parsed = _parse_responses(translate_fn(materialize_requests(assigned)))
     expected = assigned.select(
         "batch_id", "description_id", "english_sentence", "source_stem", "seq"
     )
-    joined = rejoin_results(expected, parsed)
-    return joined.withColumn("is_failed", F.col("translation").isNull()).withColumn(
-        "is_suspicious", is_suspicious(F.col("translation"))
-    )
+    return _rejoin_and_flag(expected, parsed)
 
 
-def folder_summary(
-    spark: SparkSession,
-    input_dir: str,
-    translate_fn=translate_requests,
-) -> DataFrame:
-    """X-7's per-file result taxonomy as a groupBy(source) summary
+def per_file_summary(rows: DataFrame) -> DataFrame:
+    """X-7's per-file result taxonomy over :func:`folder_pipeline` rows
     (reference prints this per subprocess,
-    ``batch_auto_translate.py:231-280``). ``translate_fn`` passes
-    through to the pipeline (fault injection included)."""
-    rows = folder_pipeline(spark, input_dir, translate_fn=translate_fn)
+    ``batch_auto_translate.py:231-280``)."""
     total = F.count("*")
     failed = F.count(F.when(F.col("is_failed"), 1))
     return rows.groupBy("source_stem").agg(
@@ -109,4 +65,16 @@ def folder_summary(
         failed.alias("failed"),
         F.round((total - failed) * 100.0 / total, 2).alias("success_rate_pct"),
         F.countDistinct("batch_id").alias("n_batches"),
+    )
+
+
+def folder_summary(
+    spark: SparkSession,
+    input_dir: str,
+    translate_fn=translate_requests,
+) -> DataFrame:
+    """:func:`per_file_summary` of a folder run. ``translate_fn`` passes
+    through to the pipeline (fault injection included)."""
+    return per_file_summary(
+        folder_pipeline(spark, input_dir, translate_fn=translate_fn)
     )

@@ -17,12 +17,12 @@ groupBy(batch_id) materialization, (3) the re-join on
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.parsing import parse_translations
-from ..functions.predicates import is_suspicious, is_truncated
-from ..functions.repair import repair_json_udf
+from ..functions.predicates import is_suspicious
+from ..functions.repair import gated_repair
 from ..operators.aggregates import run_summary
 from ..operators.dedup import anti_join_dedup
 from ..operators.joins import rejoin_results
@@ -36,6 +36,29 @@ from ..sources import load_testdata
 from ..translate import translate_requests
 
 
+def _r7_filter_trim(docs: DataFrame) -> DataFrame:
+    """R-7: drop blank sentences, trim the rest."""
+    return docs.filter(F.length(F.trim(F.col("english_sentence"))) > 0).withColumn(
+        "english_sentence", F.trim(F.col("english_sentence"))
+    )
+
+
+def _shard_todo(docs: DataFrame, shard: Column) -> DataFrame:
+    """R-7 + pack order for (description_id, english_sentence) input:
+    ``shard`` as given, ``seq`` = the id's rank within its shard. String
+    ids need no numeric form, and batch ids never span shards. The
+    folder (shard = file stem), streaming (shard = micro-batch) and CLI
+    (one shard) paths all shape their todo here."""
+    return (
+        _r7_filter_trim(docs)
+        .withColumn("shard", shard)
+        .withColumn(
+            "seq",
+            F.row_number().over(Window.partitionBy("shard").orderBy("description_id")),
+        )
+    )
+
+
 def _pack(todo: DataFrame, limit: int) -> DataFrame:
     """R-17: token-cost pack (per-shard window)."""
     costed = with_cost(todo, "english_sentence")
@@ -45,25 +68,17 @@ def _pack(todo: DataFrame, limit: int) -> DataFrame:
 
 
 def _parse_responses(responses: DataFrame) -> DataFrame:
-    """F-13 → F-7/F-8: repair-then-parse cascade, exploded to rows.
+    """F-13 → F-7/F-8: gated repair-then-parse cascade, exploded to
+    (batch_id, description_id, translation) rows.
 
     The repair UDF is materialized in its own projection: Spark's
     ExtractPythonUDFs then runs it as one Arrow stage, and the native
     parse cascade (which uses higher-order lambdas) reads its output
     as a plain attribute — a UDF nested inside a lambda is unsupported.
-    The native is_truncated gate keeps Python off the healthy rows:
-    repair_content() only acts on blobs is_truncated() covers, so
-    gating is exactly semantics-preserving and at scale the Arrow
-    stage sees only the (rare) damaged batches.
     """
     repaired = responses.select(
         F.col("custom_id").alias("batch_id"),
-        F.when(
-            is_truncated(F.col("content")),
-            F.coalesce(repair_json_udf(F.col("content")), F.col("content")),
-        )
-        .otherwise(F.col("content"))
-        .alias("repaired_content"),
+        gated_repair(F.col("content")).alias("repaired_content"),
     )
     return repaired.select(
         "batch_id",
@@ -88,9 +103,9 @@ def translate_docs(todo: DataFrame, limit: int = 4000) -> DataFrame:
     re-join → quality flags.
 
     ``todo`` must carry (description_id, english_sentence, shard, seq)
-    — already filtered and deduplicated. Both the batch flagship and
-    the streaming flagship (streaming/flagship.py, per micro-batch) run
-    exactly this fragment.
+    — already filtered and deduplicated. The batch flagship, the
+    streaming flagship (streaming/flagship.py, per micro-batch) and the
+    CLI's ``translate`` run exactly this fragment.
     """
     # The batch assignment feeds BOTH the request materialization and
     # the expected-rows join side; unpersisted, Spark recomputes the
@@ -200,20 +215,23 @@ def translation_pipeline(
     return translate_docs(todo, limit=limit)
 
 
-def _flagship_todo(spark: SparkSession, sf_dir: str, done_mod: int) -> DataFrame:
-    """Scan + R-7 filter/trim + R-12 anti-join for the flagship input."""
+def _flagship_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scan + projection + R-7 filter/trim of the flagship input: the
+    ``documents`` table, sharded by language in doc_id order."""
     t = load_testdata(spark, sf_dir)
-    docs = t["documents"].select(
-        F.col("doc_id").cast("string").alias("description_id"),
-        F.col("text").alias("english_sentence"),
-        F.col("lang").alias("shard"),
-        F.col("doc_id").alias("seq"),
+    return _r7_filter_trim(
+        t["documents"].select(
+            F.col("doc_id").cast("string").alias("description_id"),
+            F.col("text").alias("english_sentence"),
+            F.col("lang").alias("shard"),
+            F.col("doc_id").alias("seq"),
+        )
     )
-    # R-7: non-empty filter + trim.
-    docs = docs.filter(F.length(F.trim(F.col("english_sentence"))) > 0).withColumn(
-        "english_sentence", F.trim(F.col("english_sentence"))
-    )
-    # R-12: anti-join against the already-done set.
+
+
+def _flagship_todo(spark: SparkSession, sf_dir: str, done_mod: int) -> DataFrame:
+    """Flagship docs + R-12 anti-join against the already-done set."""
+    docs = _flagship_docs(spark, sf_dir)
     done = docs.filter(F.col("seq") % done_mod == 0).select("description_id")
     return anti_join_dedup(docs, done)
 

@@ -96,6 +96,11 @@ _CHANGED_THIS_ROUND = frozenset({
     "profile_psi_drift",  # one bucket-count pass + conditional-agg pivot
     "embedding_pca_recon",  # one scatter fit + fused two-rank recon pass
     "basket_brand_lift",  # row-local pair generation; self-join removed
+    # translate-flow consolidation (docs → pack from the flagship's parts;
+    # gated repair through functions/repair.py:gated_repair):
+    "r15_extras_detect",
+    "analyze_error_taxonomy",
+    "analyze_full_taxonomy",  # repair now gated like every other path
 })
 
 
@@ -506,29 +511,12 @@ def r15_extras_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     on response ingestion)."""
     from .operators.joins import detect_extras
     from .operators.packing import materialize_requests
-    from .plans.pipeline import _parse_responses
+    from .plans.pipeline import _flagship_docs, _pack, _parse_responses
     from .translate import mock_translate_extras_udf, translate_requests
 
-    t = load_testdata(spark, sf_dir)
-    docs = (
-        t["documents"]
-        .filter(F.length(F.trim("text")) > 0)
-        .select(
-            F.col("doc_id").cast("string").alias("description_id"),
-            F.trim("text").alias("english_sentence"),
-            F.col("lang").alias("shard"),
-            F.col("doc_id").alias("seq"),
-        )
-    )
-    assigned = assign_batches_cumsum(
-        with_cost(docs, "english_sentence"),
-        order_col="seq",
-        limit=4000,
-        shard_col="shard",
-    )
-    requests = materialize_requests(assigned)
+    assigned = _pack(_flagship_docs(spark, sf_dir), 4000)
     responses = translate_requests(
-        requests, translator_udf=mock_translate_extras_udf
+        materialize_requests(assigned), translator_udf=mock_translate_extras_udf
     )
     parsed = _parse_responses(responses)
     expected = assigned.select("batch_id", "description_id")
@@ -2168,42 +2156,21 @@ def analyze_error_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
     unparseable."""
     from .functions.parsing import parse_translations
     from .functions.predicates import is_truncated
-    from .functions.repair import repair_json_udf
-    from .operators.packing import (
-        assign_batches_cumsum,
-        materialize_requests,
-        with_cost,
-    )
+    from .functions.repair import gated_repair
+    from .operators.packing import materialize_requests
+    from .plans.pipeline import _flagship_todo, _pack
     from .translate import translate_requests
 
-    t = load_testdata(spark, sf_dir)
-    docs = (
-        t["documents"]
-        .select(
-            F.col("doc_id").cast("string").alias("description_id"),
-            F.trim("text").alias("english_sentence"),
-            F.col("lang").alias("shard"),
-            F.col("doc_id").alias("seq"),
-        )
-        .filter(F.length("english_sentence") > 0)
-    )
-    todo = docs.filter(F.col("seq") % 7 != 0)
-    assigned = assign_batches_cumsum(
-        with_cost(todo, "english_sentence"), order_col="seq", limit=4000,
-        shard_col="shard",
-    )
+    assigned = _pack(_flagship_todo(spark, sf_dir, 7), 4000)
     # persist(): codegen barrier below the parse projection (see
     # analyze_full_taxonomy — keeps the huge parse trees out of the
     # upstream's codegen unit).
     responses = translate_requests(materialize_requests(assigned)).persist()
     staged = responses.select(
         F.col("custom_id").alias("batch_id"),
-        F.col("content"),
         F.size(parse_translations(F.col("content"))).alias("n_parsed"),
         is_truncated(F.col("content")).alias("truncated"),
-        F.when(
-            is_truncated(F.col("content")), repair_json_udf(F.col("content"))
-        ).alias("repaired_content"),
+        gated_repair(F.col("content")).alias("repaired_content"),
     )
     classified = staged.select(
         "batch_id",
@@ -2257,30 +2224,12 @@ def analyze_full_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
     selector."""
     from .functions.parsing import parse_translations
     from .functions.predicates import is_truncated
-    from .functions.repair import repair_json_udf
-    from .operators.packing import (
-        assign_batches_cumsum,
-        materialize_requests,
-        with_cost,
-    )
+    from .functions.repair import gated_repair
+    from .operators.packing import materialize_requests
+    from .plans.pipeline import _flagship_todo, _pack
     from .translate import translate_requests
 
-    t = load_testdata(spark, sf_dir)
-    docs = (
-        t["documents"]
-        .select(
-            F.col("doc_id").cast("string").alias("description_id"),
-            F.trim("text").alias("english_sentence"),
-            F.col("lang").alias("shard"),
-            F.col("doc_id").alias("seq"),
-        )
-        .filter(F.length("english_sentence") > 0)
-    )
-    todo = docs.filter(F.col("seq") % 7 != 0)
-    assigned = assign_batches_cumsum(
-        with_cost(todo, "english_sentence"), order_col="seq", limit=4000,
-        shard_col="shard",
-    )
+    assigned = _pack(_flagship_todo(spark, sf_dir, 7), 4000)
     responses = translate_requests(materialize_requests(assigned))
     sel = (
         F.ascii(F.substring(F.md5(F.col("custom_id").cast("binary")), 1, 1)) % 8
@@ -2305,11 +2254,9 @@ def analyze_full_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "content",
         F.size(parse_translations(F.col("content"))).alias("n_parsed"),
         is_truncated(F.col("content")).alias("truncated"),
-        F.size(
-            parse_translations(
-                F.coalesce(repair_json_udf(F.col("content")), F.col("content"))
-            )
-        ).alias("n_repaired"),
+        F.size(parse_translations(gated_repair(F.col("content")))).alias(
+            "n_repaired"
+        ),
     )
     classified = staged.select(
         "batch_id",

@@ -16,12 +16,12 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..ledger import Ledger
-from ..plans.pipeline import translate_docs
+from ..plans.pipeline import _shard_todo, translate_docs
 from ..schemas import DESCRIPTIONS
 
 
@@ -115,19 +115,9 @@ def run_streaming_translation(
                 ]
             )
         try:
-            docs = (
-                batch_df.filter(F.length(F.trim("english_sentence")) > 0)
-                .withColumn("english_sentence", F.trim("english_sentence"))
-                # Shard per micro-batch: batch ids stay unique across
-                # triggers without global coordination.
-                .withColumn("shard", F.lit(f"mb{micro_batch_id}"))
-                .withColumn(
-                    "seq",
-                    F.row_number().over(
-                        Window.partitionBy("shard").orderBy("description_id")
-                    ),
-                )
-            )
+            # Shard per micro-batch: batch ids stay unique across
+            # triggers without global coordination.
+            docs = _shard_todo(batch_df, F.lit(f"mb{micro_batch_id}"))
             result = translate_docs(docs, limit=limit).select(
                 "batch_id",
                 "description_id",

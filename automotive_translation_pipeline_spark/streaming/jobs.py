@@ -28,6 +28,8 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
+from ..plans.pipeline import _parse_responses
+
 POLL_INTERVAL_SECS = 300  # reference auto_translate.py:33
 
 # --- windowed aggregations (extension surface) ----------------------------
@@ -493,29 +495,11 @@ def ledger_state_stream_tws(
 # --- repair second pass ---------------------------------------------------
 
 
-def repair_pass(responses: DataFrame) -> DataFrame:
-    """The analyze-mode repair re-run (``auto_translate.py:1339-1396``)
-    as a batch transform suitable for ``foreachBatch``: take stored
-    responses, re-parse with repair, emit recovered rows."""
-    from ..functions.parsing import parse_translations
-    from ..functions.predicates import is_truncated
-    from ..functions.repair import repair_json_udf
-
-    repaired = responses.select(
-        "custom_id",
-        F.when(
-            is_truncated(F.col("content")),
-            F.coalesce(repair_json_udf(F.col("content")), F.col("content")),
-        )
-        .otherwise(F.col("content"))
-        .alias("repaired"),
-    )
-    return repaired.select(
-        F.col("custom_id").alias("batch_id"),
-        F.explode(parse_translations(F.col("repaired"))).alias(
-            "description_id", "translation"
-        ),
-    )
+# The analyze-mode repair re-run (``auto_translate.py:1339-1396``) as a
+# batch transform suitable for ``foreachBatch``: stored responses in,
+# recovered (batch_id, description_id, translation) rows out — the
+# flagship's own repair/parse step.
+repair_pass = _parse_responses
 
 
 def enrich_with_dimension(

@@ -11,6 +11,7 @@ bottleneck, no count()-style column pruning that would skip the work).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -549,6 +550,7 @@ def main() -> None:
     # a tail truncation keeps the headline numbers.
     here = os.path.dirname(os.path.abspath(__file__))
     detail_file = f"BENCH_detail_sf{sf}.json"
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     detail = {
         "queries_times": per_query_times,
         "queries_median": per_query_median,
@@ -557,15 +559,22 @@ def main() -> None:
         "accuracy": accuracy,
         "queries_iqr_heavy": per_query_iqr,
         "queries": per_query,
-        "sf": sf,
+        "sf": sf_val,
         "cpus": CPUS,
         "calib_cpu_s": calib,
     }
+    # Temp file + os.replace: a failed write (disk full, killed run)
+    # never leaves a partial sidecar that a reader could take as valid.
+    detail_path = os.path.join(here, detail_file)
+    tmp_path = f"{detail_path}.tmp"
     try:
-        with open(os.path.join(here, detail_file), "w") as fh:
+        with open(tmp_path, "w") as fh:
             json.dump(detail, fh)
+        os.replace(tmp_path, detail_path)
     except OSError:
         detail_file = None  # read-only checkout: line stays complete
+        with contextlib.suppress(OSError):
+            os.remove(tmp_path)
     payload = {
         "queries_median": per_query_median,
         "queries": per_query,
@@ -586,7 +595,6 @@ def main() -> None:
     # (same suite + harness, data from tools/gen_testdata.py — see
     # SCALE.md "Measured scale-up"); per-query numbers live in the
     # committed files themselves.
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     for committed_sf, fname in ((1.0, "BENCH_sf1.json"),
                                 (3.0, "BENCH_sf3.json")):
         path = os.path.join(here, fname)

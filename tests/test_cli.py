@@ -53,6 +53,20 @@ def test_cli_translate_end_to_end(spark, tmp_path, capsys):
     assert "9" not in by_id
 
 
+def test_cli_translate_string_ids(spark, tmp_path, capsys):
+    """Reference-style string ids (P0001...) pack in id order within the
+    one CLI shard; no numeric cast of the id is involved."""
+    src = tmp_path / "in.csv"
+    ids = [f"P{i:04d}" for i in range(1, 13)]
+    _write_csv(src, [(i, f"brake sensor {i} housing") for i in ids])
+    out = tmp_path / "out.csv"
+    rc = cli.main(["translate", str(src), "German", str(out)], spark=spark)
+    assert rc == 0
+    assert "Total rows:      12" in capsys.readouterr().out
+    rows = list(csv.DictReader(out.read_text(encoding="utf-8-sig").splitlines()))
+    assert sorted(r["description_id"] for r in rows) == ids
+
+
 def test_cli_analyze_taxonomy(spark, tmp_path, capsys):
     payload = {"1": "first sentence here", "2": "second sentence here"}
     clean = json.dumps({k: mock_translation(v) for k, v in payload.items()})

@@ -96,6 +96,14 @@ def test_folder_pipeline_fault_taxonomy(spark, tmp_path):
             assert n_failed < n, f"{bid} completed but all rows failed"
         else:
             assert n_failed == n, f"{bid} {expected[bid]} leaked translations"
+    # R-26/R-27 shift check per file batch: a faulted batch has no clean
+    # neighbour for any failed row, so none of its rows is a suspect.
+    assert "shift_suspect" in rows.columns
+    faulted = [b for b, s in expected.items() if s != "completed"]
+    assert (
+        rows.filter(F.col("batch_id").isin(faulted) & F.col("shift_suspect")).count()
+        == 0
+    )
     rows.unpersist()
 
 

@@ -102,22 +102,11 @@ def test_spark_cascade_roundtrips_generated_payloads(spark):
         else:
             expect[cid] = ("full", translated)
     df = spark.createDataFrame(rows, "custom_id string, content string")
-    from automotive_translation_pipeline_spark.functions.predicates import (
-        is_truncated,
-    )
     from automotive_translation_pipeline_spark.functions.repair import (
-        repair_json_udf,
+        gated_repair,
     )
 
-    repaired = df.select(
-        "custom_id",
-        F.when(
-            is_truncated(F.col("content")),
-            F.coalesce(repair_json_udf(F.col("content")), F.col("content")),
-        )
-        .otherwise(F.col("content"))
-        .alias("c"),
-    )
+    repaired = df.select("custom_id", gated_repair(F.col("content")).alias("c"))
     got = {
         r["custom_id"]: r["m"]
         for r in repaired.select(
